@@ -109,12 +109,12 @@ def run_scoring_stage(spark, cpus: int) -> tuple[int, float, float]:
 
     from pyspark.sql import functions as F
 
-    from gduns_name_match_spark.functions.similarity import make_pair_scorer
+    from gduns_name_match_spark.functions.similarity import make_scorer
 
     idf = {k: float(v) for k, v in _json.loads(
         (FIXTURE_DIR / "idf.json").read_text()
     ).items()}
-    scorer = make_pair_scorer(spark, idf)
+    scorer = make_scorer(spark, {"dnb": idf}, compute_jw=True)
     # hash-partition + sort by probe name: consecutive rows share the probe
     # vector (L1-hot), halving per-pair memory traffic vs random order
     pairs = (

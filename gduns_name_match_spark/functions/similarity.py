@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import math
 import re
-import zlib
 from functools import lru_cache
 
 import numpy as np
@@ -84,34 +83,12 @@ def char_ngrams_col(name_col) -> Column:
     return F.concat(*per_n)
 
 
-def build_idf(registry_names: DataFrame, name_col: str = "norm_name") -> dict[str, float]:
-    """Smooth-IDF table over one registry's name column.
-
-    df(t) counts rows (documents) containing t at least once — matching
-    sklearn's document frequency on the same column, duplicates included.
-    Executed as explode(array_distinct(...)) → groupBy count: one narrow
-    shuffle whose key space is bounded by the char-trigram vocabulary
-    (≲ 40^3 entries), so the resulting map broadcasts at any data scale.
-    ONE pass: a per-row marker token rides the same explode, so n_docs comes
-    out of the same aggregation instead of a second scan of the registry.
-    """
-    marker = "\x00DOC\x00"  # \x00 cannot appear in an n-gram of a real name
-    grams = F.coalesce(
-        F.array_distinct(char_ngrams_col(F.col(name_col))),
-        F.array().cast("array<string>"),
-    )
-    rows = (
-        registry_names.select(
-            F.explode(F.concat(F.array(F.lit(marker)), grams)).alias("ngram")
-        )
-        .groupBy("ngram")
-        .agg(F.count("*").alias("df"))
-        .collect()
-    )
-    counts = {r["ngram"]: r["df"] for r in rows}
-    n_docs = counts.pop(marker, 0)
+def _smooth_idf(df_counts: dict[str, int], n_docs: int) -> dict[str, float]:
+    """sklearn's smooth IDF, ln((1+n)/(1+df)) + 1 — the one formula every
+    IDF table here (distributed or local) goes through."""
     return {
-        g: math.log((1.0 + n_docs) / (1.0 + df)) + 1.0 for g, df in counts.items()
+        g: math.log((1.0 + n_docs) / (1.0 + df)) + 1.0
+        for g, df in df_counts.items()
     }
 
 
@@ -122,10 +99,15 @@ def build_idf_by_tag(
 
     The reference fits one TfidfVectorizer per registry TABLE — duplicates
     included (create_KNN(dnb['NAME']) etc., automation_final2.py:400-407) —
-    so df(t) here counts rows per (tag, gram) over the non-distinct name
-    column. Same single-shuffle shape as build_idf, keyed by (tag, ngram);
-    the per-tag marker row carries n_docs. Output: {tag: {gram: idf}}."""
-    marker = "\x00DOC\x00"
+    so df(t) counts rows (documents) containing t at least once, per tag,
+    over the non-distinct name column: sklearn's document frequency.
+    Executed as explode(array_distinct(...)) → groupBy (tag, gram) count:
+    one narrow shuffle whose key space is bounded by the char-trigram
+    vocabulary (≲ 40^3 entries per tag), so the resulting map broadcasts at
+    any data scale. A per-row marker token rides the same explode, so each
+    tag's n_docs comes out of the same aggregation instead of a second scan.
+    Output: {tag: {gram: idf}}."""
+    marker = "\x00DOC\x00"  # \x00 cannot appear in an n-gram of a real name
     grams = F.coalesce(
         F.array_distinct(char_ngrams_col(F.col(name_col))),
         F.array().cast("array<string>"),
@@ -142,14 +124,16 @@ def build_idf_by_tag(
     counts: dict[str, dict[str, int]] = {}
     for r in rows:
         counts.setdefault(r["_tag"], {})[r["ngram"]] = r["df"]
-    out: dict[str, dict[str, float]] = {}
-    for tag, cmap in counts.items():
-        n_docs = cmap.pop(marker, 0)
-        out[tag] = {
-            g: math.log((1.0 + n_docs) / (1.0 + df)) + 1.0
-            for g, df in cmap.items()
-        }
-    return out
+    return {
+        tag: _smooth_idf(cmap, cmap.pop(marker, 0)) for tag, cmap in counts.items()
+    }
+
+
+def build_idf(registry_names: DataFrame, name_col: str = "norm_name") -> dict[str, float]:
+    """Smooth-IDF table over one registry's name column: the one-tag case
+    of build_idf_by_tag (a constant empty tag)."""
+    tagged = registry_names.select(F.lit("").alias("tag"), name_col)
+    return build_idf_by_tag(tagged, "tag", name_col).get("", {})
 
 
 def fit_idf_local(docs: list[str]) -> dict[str, float]:
@@ -158,14 +142,11 @@ def fit_idf_local(docs: list[str]) -> dict[str, float]:
     automation_final2.py:437-441): same formula as build_idf, computed
     without a Spark job. df counts rows, duplicates included, exactly like a
     fit on the group's city column."""
-    n = len(docs)
     df_counts: dict[str, int] = {}
     for d in docs:
         for g in set(char_ngrams(d or "")):
             df_counts[g] = df_counts.get(g, 0) + 1
-    return {
-        g: math.log((1.0 + n) / (1.0 + df)) + 1.0 for g, df in df_counts.items()
-    }
+    return _smooth_idf(df_counts, len(docs))
 
 
 def cosine_dist_local(a: str, b: str, idf: dict[str, float]) -> float:
@@ -194,20 +175,11 @@ def cosine_dist_local(a: str, b: str, idf: dict[str, float]) -> float:
     return 1.0 - dot / (na * nb)
 
 
-def _gram_hash(g: str) -> int:
-    """Stable 64-bit-ish id for an n-gram: crc32 composed with length+first
-    char, collision-free in practice for the <=40^3 char-trigram vocabulary
-    (and a collision would only merge two grams deterministically on both
-    sides of every pair). Round 7: no longer the kernel's gram identity (the
-    vocabulary POSITION is — see _tfidf_vector); kept for reference/tests."""
-    return (len(g) << 40) | (ord(g[0]) << 32) | zlib.crc32(g.encode())
-
-
 # Vectorized gram matching (round 7): every 1/2/3-gram is mapped to one
 # int64 code — a length-prefixed base-0x110000 positional encoding of its
 # code points (injective for ALL unicode strings up to 3 chars; max value
 # ~2.8e18 < 2^63) — and matched against the registry vocabulary with one
-# searchsorted instead of ~n dict lookups + _gram_hash calls per name. The
+# searchsorted instead of ~n dict lookups + per-gram hash calls per name. The
 # per-gram Python loop was the round-6 profile's single hottest path for
 # prose-length strings (~1 ms/vector — prose vectors are not memoized, so
 # the near-dup flagship rebuilt one per candidate pair; guide §4.2: hand
@@ -448,21 +420,6 @@ def jaro_winkler(a: str, b: str, prefix_weight: float = 0.1) -> float:
     return jaro + prefix * prefix_weight * (1.0 - jaro)
 
 
-def token_set_ratio(a: str, b: str) -> float:
-    """Token-set similarity in [0, 1].
-
-    Inputs here are compressed names (preprocess_text removes all spaces), so
-    word-level token sets are degenerate; the token unit is the char trigram
-    set — Jaccard over 3-gram sets, which is both O(n) and meaningful on
-    squashed strings. (Diagnostic only: the acceptor is cosine <= 0.2.)"""
-    ta = {a[i : i + 3] for i in range(max(len(a) - 2, 0))} or ({a} if a else set())
-    tb = {b[i : i + 3] for i in range(max(len(b) - 2, 0))} or ({b} if b else set())
-    if not ta and not tb:
-        return 1.0
-    union = len(ta | tb)
-    return len(ta & tb) / union if union else 0.0
-
-
 PAIR_SCORE_SCHEMA = T.StructType(
     [
         T.StructField("cos_dist", T.DoubleType()),
@@ -472,36 +429,121 @@ PAIR_SCORE_SCHEMA = T.StructType(
 )
 
 
-def make_pair_scorer(spark: SparkSession, idf: dict[str, float]):
-    """Build the batched pair-scoring pandas UDF with this registry's IDF.
+def make_scorer(
+    spark: SparkSession,
+    idfs: dict[str, dict[str, float]],
+    compute_jw: bool = False,
+):
+    """The one pair-scoring UDF: ``scorer(left, right[, tag])`` → struct
+    (cos_dist, jw_sim, token_set), each row scored under its tag's IDF.
 
-    Returns a UDF (left_name, right_name) → struct(cos_dist, jw_sim,
-    token_set). The IDF map ships to executors as a Spark broadcast once per
-    registry; vectors are memoized per unique string per executor, so a hot
-    registry name is vectorized once, not once per candidate pair.
+    ``idfs`` maps a registry tag to its IDF table — the build_idf_by_tag
+    output, or ``{tag: build_idf(...)}`` for a single registry (the tag
+    argument may then be omitted) — so every row scores with its own
+    registry's weights (the reference's one-vectorizer-per-registry
+    semantics). The whole map ships to executors as ONE Spark broadcast;
+    each Arrow batch is split by tag and every slice runs the grouped
+    searchsorted/reduceat kernel (_score_batch). Vectors are memoized per
+    unique string per executor, so a hot registry name is vectorized once,
+    not once per candidate pair. Rows with an unknown tag score cos_dist 1.0
+    (no vocabulary). ``compute_jw`` fills the jw_sim diagnostic (Jaro-
+    Winkler on plausible pairs, an O(len²) Python loop); it stays 0.0 for
+    the cosine-only consumers.
 
-    Marked non-deterministic (round 7, guide §4.4) — the kernel is in fact
-    deterministic, but every consumer filters on the score column, and the
-    optimizer's filter pushdown then evaluates the UDF TWICE (one
-    ArrowEvalPython under the pushed filter, a second in the projection
-    re-computing the column for the survivors — both visible in
-    plans/r07/er_neardup_scoring_before.txt (77)/(80)). The flag forbids the
-    duplication, leaving one evaluation; accepted rows no longer pay the
-    kernel twice.
+    Use the returned column ONLY via withColumn/select/filter, never in a
+    join condition or an aggregate expression: the UDF is marked
+    non-deterministic (round 7, guide §4.4) — the kernel is in fact
+    deterministic, but every consumer filters on the score, and the
+    optimizer's filter pushdown would otherwise evaluate the UDF TWICE (one
+    ArrowEvalPython under the pushed filter, a second in the projection —
+    plans/r07/er_neardup_scoring_before.txt (77)/(80)). The same flag means
+    a frame derived from the score re-runs the kernel per consumer: persist
+    or checkpoint it before it feeds more than one branch.
     """
-    bc = spark.sparkContext.broadcast(idf)
-    token = _new_token("pair")
+    bc = spark.sparkContext.broadcast(idfs)
+    tokens = {tag: _new_token("idf") for tag in idfs}
 
     @F.pandas_udf(PAIR_SCORE_SCHEMA)
-    def score_pairs(left: pd.Series, right: pd.Series) -> pd.DataFrame:
-        key = token
-        _register_idf(key, bc.value)
+    def score(left: pd.Series, right: pd.Series, tag: pd.Series) -> pd.DataFrame:
         lvals = left.fillna("").to_numpy()
         rvals = right.fillna("").to_numpy()
-        cos, jw, tsr = _score_batch(lvals, rvals, key)
+        tvals = tag.fillna("").to_numpy()
+        n = len(lvals)
+        cos, jw, tsr = np.ones(n), np.zeros(n), np.zeros(n)
+        batch_tags = pd.unique(tvals)
+        for tg in batch_tags:
+            tok = tokens.get(tg)
+            if tok is None:
+                continue
+            _register_idf(tok, bc.value[tg])
+            m = slice(None) if len(batch_tags) == 1 else tvals == tg
+            cos[m], jw[m], tsr[m] = _score_batch(
+                lvals[m], rvals[m], tok, compute_jw
+            )
         return pd.DataFrame({"cos_dist": cos, "jw_sim": jw, "token_set": tsr})
 
-    return score_pairs.asNondeterministic()
+    score = score.asNondeterministic()
+
+    def scorer(left: Column, right: Column, tag: Column | None = None) -> Column:
+        if tag is None:
+            if len(tokens) != 1:
+                raise ValueError("a multi-registry scorer needs a tag column")
+            tag = F.lit(next(iter(tokens)))
+        return score(left, right, tag)
+
+    return scorer
+
+
+# JVM-side prefilter: cosine distance <= 0.2 needs heavy n-gram overlap,
+# impossible when lengths diverge wildly. The loose 0.4 ratio — provably
+# recall-safe for the acceptor (property-tested) — cuts the Python-kernel
+# volume before a single Arrow batch is built.
+LENGTH_RATIO_MIN = 0.4
+
+
+def score_pairs(
+    pairs: DataFrame,
+    scorer,
+    tag_col: str | None = None,
+    partition_by_probe: bool = True,
+) -> DataFrame:
+    """The scoring step every name match runs on candidate_pairs output:
+    length-ratio prefilter, optional probe repartition, then the make_scorer
+    UDF on (m_norm, r_norm) — the probe and registry-name columns
+    candidate_pairs emits. Returns ``pairs``' columns plus cos_dist, jw_sim
+    and token_set for every surviving pair (callers apply the acceptor
+    threshold).
+
+    ``partition_by_probe=True`` repartitions by probe before the kernel:
+    AQE coalesces shuffle output by BYTES (~64 MB targets), which collapses
+    a CPU-bound scoring stage onto a handful of cores — measured 0.30
+    scaling efficiency 8→32 without it; CPU-bound pandas-UDF stages must be
+    sized by cores, not bytes. Hashing BY the probe lets the one exchange
+    also serve the per-probe best-match aggregate downstream, and sorting
+    within partitions makes consecutive kernel rows share the probe vector.
+    Probe fan-out is bounded by the blocking caps, so it cannot skew.
+
+    ``partition_by_probe=False`` (round 7) scores the block join's NATURAL
+    output order instead — for prose-length texts the repartition is doubly
+    wrong: it shuffles the full pair stream (two ~500-byte texts per row) to
+    save a later shuffle of the ~1000× smaller accepted set, and it DESTROYS
+    block locality — a text recurs as r-side ~|block| times, but hashed by
+    probe those recurrences scatter over every partition, so the
+    un-memoizable prose vector is rebuilt per pair (~90 µs each, the
+    dominant near-dup cost in the round-7 profile). The join's own output
+    keeps each block's pairs adjacent, where the kernel's in-batch memo
+    catches both sides. Name-length consumers keep True: their vectors
+    memoize globally."""
+    lp, ln = F.length("m_norm"), F.length("r_norm")
+    pairs = pairs.filter(F.least(lp, ln) >= LENGTH_RATIO_MIN * F.greatest(lp, ln))
+    if partition_by_probe:
+        pairs = pairs.repartition(
+            pairs.sparkSession.sparkContext.defaultParallelism * 2, "m_norm"
+        ).sortWithinPartitions("m_norm", *([tag_col] if tag_col else []))
+    tag = F.col(tag_col) if tag_col else None
+    return pairs.withColumn(
+        "_s", scorer(F.col("m_norm"), F.col("r_norm"), tag)
+    ).select(*pairs.columns, "_s.*")
 
 
 # sentinel for empty vectors inside the batched kernel: one impossible gram
@@ -525,7 +567,7 @@ def _score_batch(
     memory-bandwidth ceiling responds to.
 
     The r-side vectors additionally memoize WITHIN the batch (round 7): on
-    block-locality-ordered pair streams (see _accepted_pairs
+    block-locality-ordered pair streams (see score_pairs
     partition_by_probe=False) one registry text recurs across many adjacent
     probe groups, and prose-length vectors are too large for the global
     cache — without the memo every recurrence pays the full ~90 µs
@@ -594,61 +636,3 @@ def _score_batch(
         for k in np.nonzero(cos <= 0.5)[0]:
             jw[k] = jaro_winkler(lvals[k], rvals[k])
     return cos, jw, tsr
-
-
-def make_tagged_cosine_udf(spark: SparkSession, idfs: dict[str, dict[str, float]]):
-    """Cosine distance under a PER-TAG IDF table: (left, right, tag) →
-    cos_dist, each row scored with its registry's own weights (the
-    reference's one-vectorizer-per-registry semantics). One broadcast of
-    the whole {tag: idf} map; the batch is split by tag and each slice runs
-    the same grouped searchsorted/reduceat kernel. Rows with an unknown tag
-    score 1.0 (no vocabulary)."""
-    bc = spark.sparkContext.broadcast(idfs)
-    tokens = {tag: _new_token(f"tag{i}") for i, tag in enumerate(sorted(idfs))}
-
-    @F.pandas_udf(T.DoubleType())
-    def tagged_cosine(left: pd.Series, right: pd.Series, tag: pd.Series) -> pd.Series:
-        table = bc.value
-        for tg, tok in tokens.items():
-            _register_idf(tok, table[tg])
-        lvals = left.fillna("").to_numpy()
-        rvals = right.fillna("").to_numpy()
-        tvals = tag.fillna("").to_numpy()
-        out = np.ones(len(lvals))
-        for tg in pd.unique(tvals):
-            tok = tokens.get(tg)
-            if tok is None:
-                continue
-            m = tvals == tg
-            cos, _jw, _tsr = _score_batch(lvals[m], rvals[m], tok, compute_jw=False)
-            out[m] = cos
-        return pd.Series(out)
-
-    # non-deterministic flag: stop the pushed threshold filter duplicating
-    # the kernel (see make_pair_scorer)
-    return tagged_cosine.asNondeterministic()
-
-
-def make_cosine_udf(spark: SparkSession, idf: dict[str, float]):
-    """Cosine-distance-only variant (cheaper; used for city/state tie-breaks,
-    replicating the reference's per-group secondary probes
-    automation_final2.py:437-441,687-691)."""
-    bc = spark.sparkContext.broadcast(idf)
-    token = _new_token("cos")
-
-    @F.pandas_udf(T.DoubleType())
-    def cosine_dist(left: pd.Series, right: pd.Series) -> pd.Series:
-        key = token
-        _register_idf(key, bc.value)
-        lvals = left.fillna("").to_numpy()
-        rvals = right.fillna("").to_numpy()
-        # same grouped searchsorted/reduceat kernel as the pair scorer —
-        # the per-pair path allocates ~10 temporaries per call and stops
-        # scaling past ~8 workers; compute_jw=False because this consumer
-        # discards jw and tie-break groups are full of close (cos<=0.5) pairs
-        cos, _jw, _tsr = _score_batch(lvals, rvals, key, compute_jw=False)
-        return pd.Series(cos)
-
-    # non-deterministic flag: stop the pushed threshold filter duplicating
-    # the kernel (see make_pair_scorer)
-    return cosine_dist.asNondeterministic()

@@ -64,6 +64,12 @@ class BlockingResult:
         return iter((self.pairs, self.stats))
 
     def release(self, include_stats: bool = True) -> None:
+        """Unpersist the frames ``candidate_pairs`` cached. Call once the
+        pairs output is materialized (persisted+counted, localCheckpointed,
+        written); releasing earlier silently recomputes the keyed sides
+        instead of erroring. ``include_stats=False`` keeps the stats frame
+        cached when the caller still needs it (e.g. to commit lineage
+        counters with a checkpoint)."""
         if not self._released:
             self._released = True
             for f in self._caches:
@@ -159,16 +165,18 @@ def block_keys_col(norm_name_col, prefix_len: int = 4):
     )
 
 
+KEY_COL = "block_key"
+
+
 def with_block_keys(
-    df: DataFrame, norm_col: str = "norm_name", out_col: str = "block_key",
-    prefix_len: int = 4,
+    df: DataFrame, norm_col: str = "norm_name", prefix_len: int = 4,
 ) -> DataFrame:
     """Explode one row per (row, block_key); ``all_keys`` keeps the row's full
     key array so the pair join can enforce min-shared-key ownership (each
     pair emitted by exactly ONE of its shared keys — no pair-dedup shuffle)."""
     return df.withColumn(
         "all_keys", block_keys_col(F.col(norm_col), prefix_len)
-    ).withColumn(out_col, F.explode("all_keys"))
+    ).withColumn(KEY_COL, F.explode("all_keys"))
 
 
 def candidate_pairs(
@@ -176,7 +184,6 @@ def candidate_pairs(
     registry_keyed: DataFrame,
     probe_id: str,
     registry_id: str,
-    key_col: str = "block_key",
     hot_key_threshold: int = 1_000,
     max_block: int = 100_000,
     max_key_pairs: int = 50_000_000,
@@ -217,12 +224,12 @@ def candidate_pairs(
     # round 2 ran two aggs plus a join of their outputs — three exchanges
     # where one suffices, pure fixed overhead on the e2e critical path.
     tagged = registry_keyed.select(
-        key_col, F.lit(1).alias("_r"), F.lit(0).alias("_p")
+        KEY_COL, F.lit(1).alias("_r"), F.lit(0).alias("_p")
     ).unionByName(
-        probe_keyed.select(key_col, F.lit(0).alias("_r"), F.lit(1).alias("_p"))
+        probe_keyed.select(KEY_COL, F.lit(0).alias("_r"), F.lit(1).alias("_p"))
     )
     stats = (
-        tagged.groupBy(key_col)
+        tagged.groupBy(KEY_COL)
         .agg(F.sum("_r").alias("reg_rows"), F.sum("_p").alias("probe_rows"))
         # probe-only keys can never produce a pair; round 2's registry-left
         # join excluded them from the stats table — keep that contract
@@ -236,14 +243,14 @@ def candidate_pairs(
         .persist()
     )
     dropped_keys = [
-        r[key_col]
-        for r in stats.filter(F.col("is_dropped")).select(key_col).limit(10_001).collect()
+        r[KEY_COL]
+        for r in stats.filter(F.col("is_dropped")).select(KEY_COL).limit(10_001).collect()
     ]
     ownership_exact = len(dropped_keys) <= 10_000
 
     reg = registry_keyed.join(
-        F.broadcast(stats.filter(~F.col("is_dropped")).select(key_col, "is_hot")),
-        key_col,
+        F.broadcast(stats.filter(~F.col("is_dropped")).select(KEY_COL, "is_hot")),
+        KEY_COL,
     )
     # hot keys: registry row fans out to every salt shard; cold keys: shard 0
     reg = reg.withColumn(
@@ -256,8 +263,8 @@ def candidate_pairs(
     ).drop("is_hot")
 
     probe = probe_keyed.join(
-        F.broadcast(stats.filter(~F.col("is_dropped")).select(key_col, "is_hot")),
-        key_col,
+        F.broadcast(stats.filter(~F.col("is_dropped")).select(KEY_COL, "is_hot")),
+        KEY_COL,
     ).withColumn(
         "salt",
         F.when(
@@ -267,19 +274,19 @@ def candidate_pairs(
 
     probe = probe.withColumnRenamed("all_keys", "_p_keys")
     reg = reg.withColumnRenamed("all_keys", "_r_keys")
-    joined = probe.join(reg, [key_col, "salt"])
+    joined = probe.join(reg, [KEY_COL, "salt"])
     if ownership_exact:
         shared = F.array_intersect("_p_keys", "_r_keys")
         if dropped_keys:
             shared = F.array_except(
                 shared, F.array(*[F.lit(k) for k in dropped_keys])
             )
-        pairs = joined.filter(F.col(key_col) == F.array_min(shared)).drop(
-            key_col, "salt", "_p_keys", "_r_keys"
+        pairs = joined.filter(F.col(KEY_COL) == F.array_min(shared)).drop(
+            KEY_COL, "salt", "_p_keys", "_r_keys"
         )
     else:  # pathological dropped-key volume: exact dedup fallback
         pairs = (
-            joined.drop(key_col, "salt", "_p_keys", "_r_keys")
+            joined.drop(KEY_COL, "salt", "_p_keys", "_r_keys")
             .dropDuplicates([probe_id, registry_id])
         )
     # the two keyed inputs stay persisted until the caller has materialized
@@ -292,23 +299,3 @@ def candidate_pairs(
         _caches=(probe_keyed, registry_keyed) if persist_keyed else (),
     )
 
-
-def release_blocking_caches(result, include_stats: bool = True) -> None:
-    """Unpersist the frames ``candidate_pairs`` cached. Call once the pairs
-    output is materialized (persisted+counted, localCheckpointed, written);
-    releasing earlier silently recomputes the keyed sides instead of erroring.
-    ``include_stats=False`` keeps the key_stats frame cached when the caller
-    still needs it (e.g. to commit lineage counters with a checkpoint).
-
-    Accepts the :class:`BlockingResult` handle. A bare stats DataFrame (the
-    pre-handle API) gets a loud warning and only the stats unpersist — the
-    keyed inputs cannot be recovered from a transformed frame."""
-    if isinstance(result, BlockingResult):
-        result.release(include_stats=include_stats)
-        return
-    _LOG.warning(
-        "release_blocking_caches: got a bare DataFrame, not a BlockingResult —"
-        " the keyed blocking inputs cannot be released from it"
-    )
-    if include_stats:
-        result.unpersist()

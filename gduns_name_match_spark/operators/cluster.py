@@ -92,18 +92,25 @@ def connected_components(
     O(log n)-round large/small-star join loop runs distributed, unchanged.
     Both gates come from ONE aggregation on the checkpointed edge frame —
     the same measured-gate pattern as the broadcast decision tail."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    # one node type on both ends, checked before either branch: the driver
+    # branch would declare the src type for dst-drawn components, the
+    # distributed one would silently widen
+    src_t, dst_t = e.schema["src"].dataType, e.schema["dst"].dataType
+    if src_t != dst_t:
+        raise TypeError(
+            f"connected_components: {src} is {src_t.simpleString()} but {dst} "
+            f"is {dst_t.simpleString()}; cast both to one node type"
+        )
+    e = e.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint()
+    # octet_length, not length: the gate guards the collected payload, and
+    # a multi-byte id (non-ASCII document text) is up to 4 bytes per char
     gate = e.agg(
         F.count("*").alias("n"),
         F.coalesce(
             F.sum(
-                F.length(F.col("src").cast("string")).cast("long")
-                + F.length(F.col("dst").cast("string"))
+                F.octet_length(F.col("src").cast("string")).cast("long")
+                + F.octet_length(F.col("dst").cast("string"))
             ),
             F.lit(0),
         ).alias("key_bytes"),

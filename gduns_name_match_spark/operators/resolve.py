@@ -62,27 +62,29 @@ MAX_REFIT_GROUP_ROWS = 50_000
 
 def best_match_per_probe(
     scored: DataFrame,
-    probe_id: str = "mention_id",
+    probe_id: str | list[str] = "mention_id",
     dist_col: str = "cos_dist",
     name_col: str = "r_norm",
     threshold: float = THRESHOLD,
 ) -> DataFrame:
     """Accept pairs under the threshold; keep the single best registry *name*
-    per probe (deterministic (dist asc, name asc) tie-break — struct min
-    compares fields left to right, the window's orderBy exactly).
+    per probe key (``probe_id``: one column or a list, e.g. (m_norm, tag)
+    for a per-registry best) with the deterministic (dist asc, name asc)
+    tie-break — struct min compares fields left to right.
 
     One hash aggregate instead of a row_number window: no per-partition sort
     of the scored pair stream, and the partial (map-side) aggregate shrinks
     every partition to one row per probe before anything moves — on a stream
-    already hash-partitioned by probe it is sort-free and shuffle-free.
-    Returns (probe_id, name_col, dist_col)."""
+    already hash-partitioned by the key's first column it is sort-free and
+    shuffle-free. Returns (*probe_id, name_col, dist_col)."""
+    keys = [probe_id] if isinstance(probe_id, str) else list(probe_id)
     best = F.min(F.struct(F.col(dist_col), F.col(name_col))).alias("_best")
     return (
         scored.filter(F.col(dist_col) <= threshold)
-        .groupBy(probe_id)
+        .groupBy(*keys)
         .agg(best)
         .select(
-            probe_id,
+            *keys,
             F.col(f"_best.{name_col}").alias(name_col),
             F.col(f"_best.{dist_col}").alias(dist_col),
         )
@@ -164,12 +166,12 @@ def _with_group_refit_dists(
 
     big = joined.filter(F.col("refit_capped"))
     if city_cosine_udf is not None and probe_city is not None:
-        big_city = city_cosine_udf(F.col(probe_city), F.col("g_city"))
+        big_city = city_cosine_udf(F.col(probe_city), F.col("g_city"))["cos_dist"]
     else:
         big_city = F.lit(1.0)
     if city_cosine_udf is not None and probe_hq is not None:
         big_hq = F.when(F.col(probe_hq) == "", F.lit(1.0)).otherwise(
-            city_cosine_udf(F.col(probe_hq), F.col("g_city"))
+            city_cosine_udf(F.col(probe_hq), F.col("g_city"))["cos_dist"]
         )
     else:
         big_hq = F.lit(1.0)
@@ -358,7 +360,8 @@ def resolve_gdun(
 
     ``group_refit=True`` scores the city/HQ rungs with a per-group TF-IDF
     re-fit (reference-exact V5); the default scores them with the caller's
-    ``city_cosine_udf`` (registry-wide IDF — cheaper, one fitted model).
+    ``city_cosine_udf`` (a one-registry make_scorer over a registry-wide
+    city IDF — cheaper, one fitted model).
 
     ``geo_mode`` picks the rung order/subset semantics (see module
     docstring): ``"merged"`` (engine default), ``"city"`` (reference
@@ -390,9 +393,8 @@ def resolve_gdun(
     else:
         has_city = probe_city is not None and city_cosine_udf is not None
         if has_city:
-            joined = joined.withColumn(
-                "city_dist", city_cosine_udf(F.col(probe_city), F.col("g_city"))
-            )
+            city = city_cosine_udf(F.col(probe_city), F.col("g_city"))
+            joined = joined.withColumn("city_dist", city["cos_dist"])
         else:
             joined = joined.withColumn("city_dist", F.lit(1.0))
 
@@ -402,7 +404,7 @@ def resolve_gdun(
             joined = joined.withColumn(
                 "hq_dist",
                 F.when(F.col(probe_hq) == "", F.lit(1.0)).otherwise(
-                    city_cosine_udf(F.col(probe_hq), F.col("g_city"))
+                    city_cosine_udf(F.col(probe_hq), F.col("g_city"))["cos_dist"]
                 ),
             )
         else:

@@ -25,7 +25,8 @@ Spark-first decomposition (replaces round 1's ~8 sequential match jobs):
 
 * PASS 1 — mentions vs the UNION of all registry names (tagged by registry):
   one blocking + Arrow-scoring job; per-(mention, registry) best via one
-  window. At 10^12 mentions this is the only mention-volume scoring job.
+  sort-free aggregate. At 10^12 mentions this is the only mention-volume
+  scoring job.
 * PASS 2 — candidate DNB *targets* (CU names, merger parents, FDIC names,
   event ultimate parents) vs DNB: mention-INDEPENDENT, O(|registries|) — the
   second hop of every cascade branch precomputed once.
@@ -56,7 +57,7 @@ Per-registry IDF (round-3 documented divergence 1, closed): every
 fit over the registry table's non-distinct name column exactly like the
 reference's one-TfidfVectorizer-per-table (automation_final2.py:400-407);
 the tables come from ONE tagged aggregation pass and ship as one broadcast
-(see build_idf_by_tag / make_tagged_cosine_udf, adversarial fixture in
+(see build_idf_by_tag / make_scorer, adversarial fixture in
 tests/test_cascade.py::test_per_registry_idf_reference_parity).
 
 Title-change chain (round-5 parity; closes the round-4 documented
@@ -98,13 +99,11 @@ from gduns_name_match_spark.functions.normalize import (
 )
 from gduns_name_match_spark.functions.similarity import (
     build_idf_by_tag,
-    make_cosine_udf,
-    make_tagged_cosine_udf,
+    make_scorer,
+    score_pairs,
 )
 from gduns_name_match_spark.operators.blocking import (
-    BlockingResult,
     candidate_pairs,
-    release_blocking_caches,
     with_block_keys,
 )
 from gduns_name_match_spark.operators.cluster import chase_to_root
@@ -112,6 +111,7 @@ from gduns_name_match_spark.operators.resolve import (
     GDUN_LIQUIDATED,
     GDUN_MANUAL,
     THRESHOLD,
+    best_match_per_probe,
     resolve_gdun,
 )
 
@@ -228,97 +228,6 @@ def impute_state(mentions: DataFrame, gazetteer: DataFrame | None) -> DataFrame:
             F.lit(""),  # keep the join-key invariant: never NULL
         ),
     ).drop("gz_state")
-
-
-def _accepted_pairs(
-    spark: SparkSession,
-    probes: DataFrame,      # one column: probe_col, distinct
-    names: DataFrame,       # one column: name_col, distinct
-    idf: dict,
-    threshold: float,
-    probe_col: str,
-    name_col: str,
-    symmetric: bool = False,
-    partition_by_probe: bool = True,
-    persist_keyed: bool = True,
-) -> "tuple[DataFrame, BlockingResult]":
-    """One blocking + salted join + Arrow-batched scoring job; returns the
-    accepted (probe, name, cos_dist) pairs (dist <= threshold) plus the
-    BlockingResult handle — the caller must release_blocking_caches(handle)
-    once the accepted set is materialized.
-
-    Scoring uses the cosine-only kernel (make_cosine_udf): every consumer of
-    this helper reads cos_dist alone, and the full pair scorer additionally
-    runs the O(len²) Jaro-Winkler Python loop for each plausible pair — pure
-    waste here (round-7 profile: JW accounted for a double-digit share of
-    the near-dup flagship's 267s scoring stage). Cos values are identical —
-    both UDFs run the same _score_batch kernel.
-
-    ``symmetric=True`` (valid ONLY when probes and names are the same set)
-    scores each unordered pair once (probe < name) and mirrors the accepted
-    rows afterwards — the kernel volume halves while the returned set is
-    unchanged except that self-pairs (probe == name, cos 0) are dropped;
-    the sole symmetric consumer (near-dup components) discards self-pairs
-    anyway. Cosine is symmetric in its arguments (the kernel orders the two
-    vectors by length internally), so the mirrored rows carry bit-identical
-    distances.
-
-    ``partition_by_probe=False`` (round 7) skips the probe-hash repartition
-    and scores the block join's NATURAL output order. For prose-length
-    texts the repartition is doubly wrong: it shuffles the full pair stream
-    (two ~500-byte texts per row — at 50k docs, ~2 GB moved to save a
-    later shuffle of the ~1000× smaller accepted set), and it DESTROYS
-    block locality — a text recurs as r-side ~|block| times, but hashed by
-    probe those recurrences scatter over every partition, so the
-    un-memoizable prose vector is rebuilt per pair (~90 µs each, the
-    dominant near-dup cost in the round-7 profile). The join's own output
-    keeps each block's pairs adjacent, where the kernel's in-batch memo
-    catches both sides (guide §2.3/§2.4: shuffle fewer bytes, remove the
-    exchange outright). Name-length consumers (the cascade) keep True:
-    their vectors memoize globally, and the argmin window downstream reuses
-    the probe partitioning."""
-    cosine = make_cosine_udf(spark, idf)
-    blocking = candidate_pairs(
-        with_block_keys(probes, probe_col),
-        with_block_keys(names, name_col),
-        probe_id=probe_col,
-        registry_id=name_col,
-        n_salt=4,
-        persist_keyed=persist_keyed,
-    )
-    pairs = blocking.pairs
-    if symmetric:
-        pairs = pairs.filter(F.col(probe_col) < F.col(name_col))
-    # JVM length prefilter + core-count repartition before the Python kernel
-    # (same rationale as plans/pipeline.py)
-    len_ok = (
-        F.least(F.length(probe_col), F.length(name_col))
-        >= 0.4 * F.greatest(F.length(probe_col), F.length(name_col))
-    )
-    pairs = pairs.filter(len_ok)
-    if partition_by_probe:
-        # partition BY probe: one exchange serves both the kernel (probe-
-        # sorted rows share the cached vector) and the per-probe argmin
-        # window
-        pairs = pairs.repartition(
-            spark.sparkContext.defaultParallelism * 2, probe_col
-        ).sortWithinPartitions(probe_col)
-    scored = pairs.withColumn(
-        "cos_dist", cosine(F.col(probe_col), F.col(name_col))
-    )
-    accepted = scored.filter(F.col("cos_dist") <= threshold)
-    if symmetric:
-        # materialize the half before mirroring: a lazy self-union would
-        # execute the scoring subtree once per branch, un-doing the halving
-        accepted = accepted.localCheckpoint()
-        accepted = accepted.unionByName(
-            accepted.select(
-                F.col(name_col).alias(probe_col),
-                F.col(probe_col).alias(name_col),
-                "cos_dist",
-            )
-        )
-    return accepted, blocking
 
 
 def _norm_reg(df: DataFrame | None, name_col: str) -> DataFrame | None:
@@ -588,9 +497,6 @@ def run_cascade(
     mentions: DataFrame,
     regs: Registries,
     threshold: float = THRESHOLD,
-    eager: bool = True,
-    persist_chain: bool = True,
-    lazy_barriers: bool = False,
     timings: dict | None = None,
 ) -> DataFrame:
     """mentions: (mention_id, raw_name [, city, state, old_gdun]) →
@@ -600,14 +506,12 @@ def run_cascade(
     hop_name / parent_active_dist / parent_city_dist / list_parents_fdic /
     list_parents_geo / parent_unique / branch_source — see _AUDIT_TYPES).
 
-    ``eager=True`` (default) localCheckpoints the decision output and
-    unpersists every frame the cascade cached — repeated invocations in a
+    The decision output is localCheckpointed and every frame the cascade
+    cached is unpersisted before returning — repeated invocations in a
     long-lived session (driver bench, incremental batches) must not
     accumulate cached registry frames (the MatchResult.release class of
     leak, VERDICT r04 'What's wrong' #1). At a real 100 TB run the output
-    would go through plans/checkpoint.py to durable storage instead;
-    ``eager=False`` returns the lazy plan and leaves cache lifecycle to the
-    caller (plan-inspection tests)."""
+    would go through plans/checkpoint.py to durable storage instead."""
     # optional per-barrier wall attribution (driver-side perf_counter marks
     # around the plan's MATERIALIZING actions; zero effect on the plan —
     # same contract as match_documents(timings=...))
@@ -801,9 +705,9 @@ def run_cascade(
     _mark("idf_by_tag")
 
     # BOTH passes in ONE scoring job: probes = mentions ∪ targets ∪ parent
-    # candidates. The per-(probe, tag) argmin window serves pass 1 (mention →
-    # each registry's best), pass 2 (target → best DNB name) and the per-
-    # parent FDIC probes (parent root → best FDIC name, reference
+    # candidates. The per-(probe, tag) argmin aggregate serves pass 1
+    # (mention → each registry's best), pass 2 (target → best DNB name) and
+    # the per-parent FDIC probes (parent root → best FDIC name, reference
     # :1328-1334) from the same accepted set. Names carry their registry-
     # membership tags as an ARRAY through the blocking join (no post-hoc tag
     # join = no extra pair-stream shuffle); the pair explodes per tag and
@@ -844,7 +748,6 @@ def run_cascade(
     names_tagged = reg_names.groupBy("r_norm").agg(
         F.sort_array(F.collect_set("tag")).alias("tags")
     )
-    scorer = make_tagged_cosine_udf(spark, idfs)
     blocking = candidate_pairs(
         with_block_keys(probes, "m_norm"),
         with_block_keys(names_tagged, "r_norm"),
@@ -852,32 +755,16 @@ def run_cascade(
         registry_id="r_norm",
         n_salt=4,
     )
-    len_ok = (
-        F.least(F.length("m_norm"), F.length("r_norm"))
-        >= 0.4 * F.greatest(F.length("m_norm"), F.length("r_norm"))
-    )
-    scored = (
-        blocking.pairs.filter(len_ok)
-        .withColumn("tag", F.explode("tags"))
+    tagged_pairs = (
+        blocking.pairs.withColumn("tag", F.explode("tags"))
         # the consumed-tags prefilter: BEFORE the exchange and the Python
         # kernel, so the dropped rows are never shuffled or scored
         .filter(F.array_contains(F.col("ptags"), F.col("tag")))
         .drop("ptags", "tags")
-        .repartition(spark.sparkContext.defaultParallelism * 2, "m_norm")
-        .sortWithinPartitions("m_norm", "tag")
-        .withColumn(
-            "cos_dist",
-            scorer(F.col("m_norm"), F.col("r_norm"), F.col("tag")),
-        )
     )
-    accepted = scored.filter(F.col("cos_dist") <= threshold)
-    w1 = Window.partitionBy("m_norm", "tag").orderBy(
-        F.col("cos_dist").asc(), F.col("r_norm").asc()
-    )
+    scored = score_pairs(tagged_pairs, make_scorer(spark, idfs), tag_col="tag")
     best_by_tag = (
-        accepted
-        .withColumn("rk", F.row_number().over(w1))
-        .filter(F.col("rk") == 1)
+        best_match_per_probe(scored, ["m_norm", "tag"], threshold=threshold)
         .select("m_norm", "tag", F.col("r_norm").alias("best_name"),
                 F.col("cos_dist").alias("best_dist"))
         .localCheckpoint()
@@ -885,7 +772,7 @@ def run_cascade(
     _mark("pass1_score")
     # the checkpoint above materialized the accepted pairs — the blocking
     # caches behind them are dead weight from here on
-    release_blocking_caches(blocking)
+    blocking.release()
     best1 = best_by_tag.join(m.select("m_norm").distinct(), "m_norm", "left_semi")
 
     # per-mention per-registry best distances, pivoted wide — these become the
@@ -1057,9 +944,8 @@ def run_cascade(
     # 5 joins); without a cache each consumer re-executes the window-counted
     # join subtree inside the one decision job (VERDICT r05 'what's wrong'
     # #2). persist (lazy, no extra barrier job) over localCheckpoint (eager
-    # barrier) per the round-6 A/B — see BENCH.md; knob kept for re-measure
-    if persist_chain:
-        cp = cp.persist()
+    # barrier) per the round-6 A/B — see BENCH.md
+    cp = cp.persist()
     # the gated first loop runs for path A always and path B with >1 parent
     # (path B's single parent takes the UNGATED special block, :1255-1281)
     loop_rows = cp.filter(F.col("path_a") | (F.col("n_parents") > 1))
@@ -1462,13 +1348,9 @@ def run_cascade(
             F.col("stage").isin("cu_active", "cu_mna", "title_cu"), "state"
         ).otherwise("city"),
     )
-    # barrier A/B (VERDICT r06 task 1a): the branch union and the decision
-    # map are full materializations + driver round trips inside the hot job;
-    # lazy_barriers=True swaps the eager localCheckpoints for lazy persists
-    # (plan NOT truncated — planning cost may grow; measured, see BENCH.md)
-    dnb_branches = (
-        dnb_branches.persist() if lazy_barriers else dnb_branches.localCheckpoint()
-    )
+    # barrier (VERDICT r06 task 1a A/B vs lazy persists, see BENCH.md): the
+    # checkpoint truncates the plan the decision and assembly jobs build on
+    dnb_branches = dnb_branches.localCheckpoint()
     _mark("branches_checkpoint")
 
     # ---- terminal GDUN decision, ONCE per distinct (dnb_name, geo, hq, mode)
@@ -1509,7 +1391,7 @@ def run_cascade(
         group_refit=True,
         mode_col="geo_mode",
     ).select("probe_key", *_DEC_COLS)
-    decided = decided.persist() if lazy_barriers else decided.localCheckpoint()
+    decided = decided.localCheckpoint()
     _mark("decide_checkpoint")
 
     resolved = (
@@ -1690,11 +1572,8 @@ def run_cascade(
         out = out.join(gnames, "gdun", "left")
     else:
         out = out.withColumn("gdun_name", F.lit(None).cast("string"))
-    if eager:
-        out = out.localCheckpoint()
-        _mark("assemble_out")
-        for f in (m, dnb, name_parents, reg_names, targets, mb, fdic_gate,
-                  pgate, *( [cp] if persist_chain else [] ),
-                  *( [dnb_branches, decided] if lazy_barriers else [] )):
-            f.unpersist()
+    out = out.localCheckpoint()
+    _mark("assemble_out")
+    for f in (m, dnb, name_parents, reg_names, targets, mb, fdic_gate, pgate, cp):
+        f.unpersist()
     return out

@@ -13,7 +13,7 @@ Re-expresses:
   max(effdate) checkpoint + strictly-newer filter.
 * ongoing M&A dual resolution (ongoing_mna.py:611-648): new events carry an
   old name AND a new/parent name; both unpivot into one mention stream, run
-  through the same match pipeline, and re-pivot into transition rows.
+  through the pipeline's mention matcher, and re-pivot into transition rows.
 """
 
 from __future__ import annotations
@@ -149,70 +149,20 @@ def mna_transitions(
 ) -> DataFrame:
     """ongoing_mna end-to-end (ongoing_mna.py:611-648): unpivot each event's
     (old name, new/parent name) into one mention stream, resolve BOTH sides
-    against DNB in a single blocking+scoring job, re-pivot into transition
-    rows (event_id, old_gdun, new_gdun, transition_ind).
+    against DNB through the pipeline's mention matcher (one blocking+scoring
+    job, the same cur_rec_ind='Y' registry filter and Manual fill), re-pivot
+    into transition rows (event_id, old_gdun, new_gdun, transition_ind).
 
     mna_events: (event_id, name, parent_name); dnb_registry is
     dnb_directory-shaped (duns_num, company, city, st, gl_ult_dun)."""
-    from pyspark.sql import Window
+    from gduns_name_match_spark.plans.pipeline import match_mentions
 
-    from gduns_name_match_spark.functions.normalize import (
-        normalize_city_col,
-        normalize_name_col,
-    )
-    from gduns_name_match_spark.functions.similarity import build_idf
-    from gduns_name_match_spark.operators.resolve import (
-        GDUN_MANUAL,
-        THRESHOLD,
-        resolve_gdun,
-    )
-    from gduns_name_match_spark.operators.blocking import release_blocking_caches
-    from gduns_name_match_spark.plans.cascade import _accepted_pairs
-
-    mentions = dual_resolution_mentions(mna_events).withColumn(
-        "m_norm", normalize_name_col(F.col("raw_name"))
-    )
-    dnb = dnb_registry.select(
-        "duns_num",
-        "gl_ult_dun",
-        normalize_name_col(F.col("company")).alias("norm_name"),
-        normalize_city_col(F.col("city")).alias("norm_city"),
-        F.col("st"),
-    ).persist()
-    dnb_names = dnb.select(F.col("norm_name").alias("r_norm")).dropDuplicates(
-        ["r_norm"]
-    )
-    idf = build_idf(dnb, "norm_name")
-    accepted, pair_stats = _accepted_pairs(
-        spark, mentions.select("m_norm").distinct(), dnb_names, idf,
-        THRESHOLD, "m_norm", "r_norm",
-    )
-    accepted = accepted.localCheckpoint()
-    release_blocking_caches(pair_stats)
-    w = Window.partitionBy("m_norm").orderBy(
-        F.col("cos_dist").asc(), F.col("r_norm").asc()
-    )
-    best = (
-        accepted.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(
-            "m_norm",
-            F.col("r_norm").alias("best_name"),
-            F.col("cos_dist").alias("best_dist"),
-        )
-    )
-    decided = resolve_gdun(
-        best, dnb, city_cosine_udf=None, probe_id="m_norm",
-        probe_city=None, probe_state=None,
-    ).select("m_norm", "gdun")
-    decisions = mentions.join(decided, "m_norm", "left").withColumn(
-        "gdun", F.coalesce("gdun", F.lit(GDUN_MANUAL).cast("long"))
-    )
-    # materialize (per-event frame, small), then release the cached registry
-    # — the returned plan must not keep a persisted input alive (same no-leak
-    # contract as the flagship entries; VERDICT r04 'What's wrong' #1)
-    out = repivot_transitions(decisions).localCheckpoint()
-    dnb.unpersist()
+    res = match_mentions(spark, dual_resolution_mentions(mna_events), dnb_registry)
+    # materialize (per-event frame, small), then release the matcher's
+    # caches — the returned plan must not keep a persisted input alive (same
+    # no-leak contract as the flagship entries; VERDICT r04 'What's wrong' #1)
+    out = repivot_transitions(res.decisions).localCheckpoint()
+    res.release()
     return out
 
 

@@ -47,6 +47,30 @@ def as_span_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _text_pair_halves(texts: DataFrame):
+    """Blocking candidates of the distinct-text table ``texts`` (``t_norm``)
+    against itself, each unordered pair once (m_norm < r_norm), self-pairs
+    never. Returns the candidate_pairs BlockingResult with its ``pairs``
+    halved; release() it once the pairs are materialized."""
+    from dataclasses import replace
+
+    from gduns_name_match_spark.operators.blocking import (
+        candidate_pairs,
+        with_block_keys,
+    )
+
+    blocking = candidate_pairs(
+        with_block_keys(texts.withColumnRenamed("t_norm", "m_norm"), "m_norm"),
+        with_block_keys(texts.withColumnRenamed("t_norm", "r_norm"), "r_norm"),
+        probe_id="m_norm",
+        registry_id="r_norm",
+        n_salt=4,
+    )
+    return replace(
+        blocking, pairs=blocking.pairs.filter(F.col("m_norm") < F.col("r_norm"))
+    )
+
+
 def _neardup_components(spark: SparkSession, texts: DataFrame) -> DataFrame:
     """Shared near-dup core over a distinct normalized-text table ``texts``
     (single column ``t_norm``): one blocking + Arrow-scoring pass of the
@@ -61,52 +85,58 @@ def _neardup_components(spark: SparkSession, texts: DataFrame) -> DataFrame:
     text in the component — a real key, never a hashed one), and best_name/
     best_dist are the closest accepted NON-SELF neighbor (null for texts with
     no near-duplicate)."""
-    from gduns_name_match_spark.functions.similarity import build_idf
-    from gduns_name_match_spark.operators.blocking import release_blocking_caches
+    from gduns_name_match_spark.functions.similarity import (
+        build_idf,
+        make_scorer,
+        score_pairs,
+    )
     from gduns_name_match_spark.operators.cluster import (
         attach_components,
         connected_components,
     )
-    from gduns_name_match_spark.operators.resolve import THRESHOLD
-    from gduns_name_match_spark.plans.cascade import _accepted_pairs
-    from pyspark.sql import Window
+    from gduns_name_match_spark.operators.resolve import (
+        THRESHOLD,
+        best_match_per_probe,
+    )
 
     idf = build_idf(texts.withColumnRenamed("t_norm", "norm_name"), "norm_name")
-    # symmetric=True: probes and names are the SAME distinct-text set, so
-    # each unordered pair is scored once (m < r) and mirrored — half the
-    # Arrow-kernel volume for an identical accepted set (self-pairs, which
-    # the nonself filter dropped anyway, never reach the kernel at all)
+    blocking = _text_pair_halves(texts)
+    # probes and names are the SAME distinct-text set, so each unordered
+    # pair is scored once (m < r) and mirrored below — half the Arrow-kernel
+    # volume for an identical accepted set (cosine is symmetric: the kernel
+    # orders the two vectors by length, so mirrored rows carry bit-identical
+    # distances), and self-pairs never reach the kernel at all.
     # partition_by_probe=False: score in the block join's natural order —
     # prose vectors don't memoize globally, so block locality (+ the kernel's
     # in-batch memo) is what keeps construction off the per-pair path, and
     # the full text-pair stream never takes an extra exchange (round 7)
-    accepted, pair_stats = _accepted_pairs(
-        spark,
-        texts.withColumnRenamed("t_norm", "m_norm"),
-        texts.withColumnRenamed("t_norm", "r_norm"),
-        idf, THRESHOLD, "m_norm", "r_norm", symmetric=True,
-        partition_by_probe=False,
+    scored = score_pairs(
+        blocking.pairs, make_scorer(spark, {"texts": idf}), partition_by_probe=False
     )
-    nonself = accepted.filter(F.col("m_norm") != F.col("r_norm")).localCheckpoint()
-    release_blocking_caches(pair_stats)
-    edges = nonself.filter(F.col("m_norm") < F.col("r_norm")).select(
-        F.col("m_norm").alias("src"), F.col("r_norm").alias("dst")
+    # materialize the half before mirroring: a lazy self-union would execute
+    # the scoring subtree once per branch, un-doing the halving
+    half = (
+        scored.filter(F.col("cos_dist") <= THRESHOLD)
+        .select("m_norm", "r_norm", "cos_dist")
+        .localCheckpoint()
     )
+    blocking.release()
+    nonself = half.unionByName(
+        half.select(
+            F.col("r_norm").alias("m_norm"),
+            F.col("m_norm").alias("r_norm"),
+            "cos_dist",
+        )
+    )
+    edges = half.select(F.col("m_norm").alias("src"), F.col("r_norm").alias("dst"))
     comp = connected_components(edges)
     with_comp = attach_components(
         texts.withColumnRenamed("t_norm", "node"), comp, "node"
     )
-    w = Window.partitionBy("m_norm").orderBy(
-        F.col("cos_dist").asc(), F.col("r_norm").asc()
-    )
-    best = (
-        nonself.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") == 1)
-        .select(
-            F.col("m_norm").alias("node"),
-            F.col("r_norm").alias("best_name"),
-            F.col("cos_dist").alias("best_dist"),
-        )
+    best = best_match_per_probe(nonself, "m_norm").select(
+        F.col("m_norm").alias("node"),
+        F.col("r_norm").alias("best_name"),
+        F.col("cos_dist").alias("best_dist"),
     )
     return with_comp.join(best, "node", "left").select(
         F.col("node").alias("t_norm"), "component", "best_name", "best_dist"

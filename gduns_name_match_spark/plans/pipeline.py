@@ -1,8 +1,12 @@
 """End-to-end record-linkage pipeline (SURVEY.md §3.1's Spark lifecycle).
 
 extract spans → normalize (Catalyst) → blocking keys → salted candidate join
-→ Arrow-batched pair scoring → threshold + argmin window → group-fetch GDUN
-decision → sentinel/manual statuses.
+→ Arrow-batched pair scoring → threshold + best-match aggregate → group-fetch
+GDUN decision → sentinel/manual statuses.
+
+``match_mentions`` is the package's one mention matcher: ``match_documents``
+feeds it the extracted name spans, ``plans/events.mna_transitions`` the two
+sides of each M&A event.
 
 Every stage is a DataFrame transformation; the only Python on the hot path is
 the batched pair scorer. The plan shuffles exactly where SURVEY.md §4.2 says
@@ -20,7 +24,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from gduns_name_match_spark.functions.normalize import (
@@ -29,11 +33,11 @@ from gduns_name_match_spark.functions.normalize import (
 )
 from gduns_name_match_spark.functions.similarity import (
     build_idf,
-    make_pair_scorer,
+    make_scorer,
+    score_pairs,
 )
 from gduns_name_match_spark.operators.blocking import (
     candidate_pairs,
-    release_blocking_caches,
     with_block_keys,
 )
 from gduns_name_match_spark.operators.resolve import (
@@ -120,13 +124,29 @@ def match_documents(
     documents: DataFrame,
     registry: DataFrame,
     threshold: float = THRESHOLD,
-    prefix_len: int = 4,
-    hot_key_threshold: int = 1_000,
     n_salt: int = 16,
-    broadcast_decisions: bool | None = None,
     timings: dict | None = None,
 ) -> MatchResult:
-    """Flagship job: assign a GDUN (or sentinel) to every name span.
+    """Flagship job: assign a GDUN (or sentinel) to every name span —
+    span extraction, then match_mentions (see there for ``registry`` and
+    ``timings``)."""
+    return match_mentions(
+        spark, extract_name_mentions(documents), registry, threshold, n_salt,
+        timings,
+    )
+
+
+def match_mentions(
+    spark: SparkSession,
+    mentions_raw: DataFrame,
+    registry: DataFrame,
+    threshold: float = THRESHOLD,
+    n_salt: int = 16,
+    timings: dict | None = None,
+) -> MatchResult:
+    """The one mention matcher: every ``raw_name`` row of ``mentions_raw``
+    gets a GDUN (or sentinel); the decisions frame keeps all its other
+    columns (mention_id/doc_id spans, event_id/side M&A sides, ...).
 
     ``registry`` is dnb_directory-shaped: (duns_num, company, city, st,
     gl_ult_dun, ...) with cur_rec_ind='Y' rows (filter applied here, mirroring
@@ -145,7 +165,6 @@ def match_documents(
         if timings is not None:
             timings[name] = round(now - _t[0], 3)
         _t[0] = now
-    mentions_raw = extract_name_mentions(documents)
     # Normalize AFTER deduplicating raw names, never per mention: the
     # normalize chain is ~20 regex/translate passes, and the mention stream
     # repeats the same surface strings constantly (1.2M mentions → ~100k
@@ -182,7 +201,7 @@ def match_documents(
 
     idf = build_idf(reg, "norm_name")
     _mark("idf_build")
-    scorer = make_pair_scorer(spark, idf)
+    scorer = make_scorer(spark, {"dnb": idf}, compute_jw=True)
 
     # Score DISTINCT normalized-name pairs, never mention pairs: N mentions of
     # the same string cost one vectorization + one score. The per-mention
@@ -192,18 +211,16 @@ def match_documents(
     # frame, and nothing re-reads the bare probe list (the broadcast gate
     # below is decided from the best-match map's own measured count).
     probes = norm_map.select("m_norm").distinct()
-    m_keyed = with_block_keys(probes, "m_norm", prefix_len=prefix_len)
+    m_keyed = with_block_keys(probes, "m_norm")
     r_keyed = with_block_keys(
         reg.select(F.col("norm_name").alias("r_norm")).dropDuplicates(["r_norm"]),
         "r_norm",
-        prefix_len=prefix_len,
     )
     blocking = candidate_pairs(
         m_keyed,
         r_keyed,
         probe_id="m_norm",
         registry_id="r_norm",
-        hot_key_threshold=hot_key_threshold,
         n_salt=n_salt,
     )
     pairs, key_stats = blocking.pairs, blocking.stats
@@ -211,39 +228,10 @@ def match_documents(
     # both sides plus the tagged-union key-count agg ran inside it
     _mark("block_key_stats")
 
-    # JVM-side prefilter: cosine distance <= 0.2 needs heavy n-gram overlap,
-    # impossible when lengths diverge wildly. Loose 0.4 ratio — provably
-    # recall-safe for the acceptor (property-tested) — cuts the Python-kernel
-    # volume before a single Arrow batch is built.
-    len_ok = (
-        F.least(F.length("m_norm"), F.length("r_norm"))
-        >= 0.4 * F.greatest(F.length("m_norm"), F.length("r_norm"))
-    )
-    # Explicit repartition before the Python kernel: AQE coalesces shuffle
-    # output by BYTES (~64 MB targets), which collapses a CPU-bound scoring
-    # stage onto a handful of cores — measured 0.30 scaling efficiency 8→32
-    # without this, the pair data being only ~200 MB. CPU-bound pandas-UDF
-    # stages must be sized by cores, not bytes.
-    # Partition BY m_norm (not round-robin): the best-match aggregate
-    # downstream wants hashpartitioning(m_norm), so this one exchange serves
-    # both stages — and sorting within partitions makes consecutive kernel
-    # rows share the probe vector (L1-hot). Probe fan-out is bounded by the
-    # blocking caps, so per-probe grouping cannot skew a partition.
-    scoring_partitions = spark.sparkContext.defaultParallelism * 2
-    scored = (
-        pairs.filter(len_ok)
-        .repartition(scoring_partitions, "m_norm")
-        .sortWithinPartitions("m_norm")
-        .withColumn("s", scorer(F.col("m_norm"), F.col("r_norm")))
-        .select(
-            "m_norm",
-            "r_norm",
-            F.col("s.cos_dist").alias("cos_dist"),
-            F.col("s.jw_sim").alias("jw_sim"),
-            F.col("s.token_set").alias("token_set"),
-        )
-        .persist()  # reused by pairs_scored diagnostics AND the decision path
-    )
+    # prefilter + probe repartition + Arrow kernel; the hashpartitioning
+    # (m_norm) it leaves is reused by the best-match aggregate below.
+    # Persisted: read by the pairs_scored diagnostics AND the decision path.
+    scored = score_pairs(pairs, scorer).persist()
     # Materialize the scored cache THROUGH the best-match aggregate: one
     # pass over the pair stream populates both the scored cache (persist
     # intercepts every scanned partition) and the tiny per-probe best map.
@@ -262,22 +250,16 @@ def match_documents(
     best_cache_handle = best  # pre-broadcast-hint handle for release()
     n_best = best.count()
     _mark("block_join_score")
-    release_blocking_caches(blocking, include_stats=False)
+    blocking.release(include_stats=False)
     # broadcast vs shuffle for the best-match map, decided by the count the
     # materializing action above ALREADY measured — the map being shipped is
     # `best` itself (probes with no accepted match never enter it), so its
     # own row count is the right gate and the former probes.count() driver
-    # round trip (VERDICT r04 task 5) is gone. broadcast_decisions forces
-    # the whole tail's choice (None = auto).
-    if broadcast_decisions is None:
-        small_probe_universe = n_best <= BROADCAST_DECISIONS_LIMIT
-    else:
-        small_probe_universe = broadcast_decisions
-
+    # round trip (VERDICT r04 task 5) is gone.
     # best has <= n_probes tiny rows: broadcasting it turns the group fetch
     # (best x registry on best_name) into a map-side hash join — the registry
     # keeps its scan partitioning instead of shuffling by name
-    if small_probe_universe:
+    if n_best <= BROADCAST_DECISIONS_LIMIT:
         best = F.broadcast(best)
     decided_norm = resolve_gdun(
         best, reg, city_cosine_udf=None, probe_id="m_norm",
@@ -296,39 +278,33 @@ def match_documents(
     # CollectMetrics node, so unpersist() on the wrapped frame would no
     # longer resolve to the cached plan — release() must see this frame
     per_raw_cache_handle = per_raw
-    if broadcast_decisions is None:
-        # measure the BYTES this map would ship, not its row count: the
-        # audit arrays dominate (a row can carry 3x100 capped elements).
-        # The metrics ride the cache-materializing count() as an Observation
-        # — ONE job both populates the per_raw cache and measures the
-        # payload, where round 4 ran a standalone aggregate-collect
-        # (VERDICT r04 task 5: the stage's second serial driver round trip)
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        per_raw = per_raw.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(
-                F.coalesce(F.size("list_of_duns"), F.lit(0))
-                + F.coalesce(F.size("list_of_gduns"), F.lit(0))
-            ).alias("long_elems"),
-            F.sum(F.coalesce(F.size("list_of_gdun_names"), F.lit(0))).alias(
-                "name_elems"
-            ),
-        )
-        per_raw.count()
-        sizes = obs.get
-        est_bytes = (
-            sizes["rows"] * _ROW_BYTES_EST
-            + (sizes["long_elems"] or 0) * _LONG_ELEM_BYTES
-            + (sizes["name_elems"] or 0) * _NAME_ELEM_BYTES
-        )
-        broadcast_raw = est_bytes <= BROADCAST_DECISIONS_MAX_BYTES
-    else:
-        broadcast_raw = broadcast_decisions
+    # measure the BYTES this map would ship, not its row count: the audit
+    # arrays dominate (a row can carry 3x100 capped elements). The metrics
+    # ride the cache-materializing count() as an Observation — ONE job both
+    # populates the per_raw cache and measures the payload, where round 4
+    # ran a standalone aggregate-collect (VERDICT r04 task 5: the stage's
+    # second serial driver round trip)
+    obs = Observation()
+    per_raw = per_raw.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(
+            F.coalesce(F.size("list_of_duns"), F.lit(0))
+            + F.coalesce(F.size("list_of_gduns"), F.lit(0))
+        ).alias("long_elems"),
+        F.sum(F.coalesce(F.size("list_of_gdun_names"), F.lit(0))).alias(
+            "name_elems"
+        ),
+    )
+    per_raw.count()
+    sizes = obs.get
+    est_bytes = (
+        sizes["rows"] * _ROW_BYTES_EST
+        + (sizes["long_elems"] or 0) * _LONG_ELEM_BYTES
+        + (sizes["name_elems"] or 0) * _NAME_ELEM_BYTES
+    )
     _mark("decision_map")
-    if broadcast_raw:
+    if est_bytes <= BROADCAST_DECISIONS_MAX_BYTES:
         per_raw = F.broadcast(per_raw)
     decisions = fill_manual_defaults(
         mentions_raw.join(per_raw, "raw_name", "left")

@@ -20,6 +20,24 @@ from pyspark.sql import SparkSession
 _PKG_ROOT = str(Path(__file__).resolve().parent.parent)
 
 
+def default_driver_memory() -> str:
+    """A quarter of the usable RAM, at least 1 GiB, as a JVM size string.
+
+    Usable RAM is physical RAM, or the cgroup v2 memory limit when a
+    container sets a lower one. A fixed heap does not fit every host: 32g
+    on a 15 GiB machine let the JVM grow until the kernel OOM-killed it,
+    while the Python workers need the rest of the RAM beside it."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            limit = f.read().strip()
+    except OSError:
+        limit = "max"
+    if limit.isdigit():
+        ram = min(ram, int(limit))
+    return f"{max(1024, ram // (4 * 1024 * 1024))}m"
+
+
 def get_spark(
     app_name: str = "gduns-er",
     cores: int | None = None,
@@ -53,10 +71,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # local mode: the driver JVM IS the executor — size it for 32
-        # concurrent Arrow tasks (the sandbox VM has 128 GiB; 8g starved the
-        # GCLocker under long-string scoring)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        # local mode: the driver JVM IS the executor; $SPARK_DRIVER_MEM
+        # overrides the RAM-derived default
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

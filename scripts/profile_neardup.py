@@ -21,23 +21,26 @@ REPS = int(sys.argv[2]) if len(sys.argv) > 2 else 2
 
 
 def run_once(spark) -> dict:
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from gduns_name_match_spark.functions.normalize import normalize_name_col as _norm
-    from gduns_name_match_spark.functions.similarity import build_idf
-    from gduns_name_match_spark.operators.blocking import (
-        candidate_pairs,
-        release_blocking_caches,
-        with_block_keys,
+    from gduns_name_match_spark.functions.similarity import (
+        build_idf,
+        make_scorer,
+        score_pairs,
     )
     from gduns_name_match_spark.operators.cluster import (
         attach_components,
         connected_components,
     )
-    from gduns_name_match_spark.operators.resolve import THRESHOLD
-    from gduns_name_match_spark.functions.similarity import make_cosine_udf
-    from gduns_name_match_spark.plans.flagship import as_span_documents
+    from gduns_name_match_spark.operators.resolve import (
+        THRESHOLD,
+        best_match_per_probe,
+    )
+    from gduns_name_match_spark.plans.flagship import (
+        _text_pair_halves,
+        as_span_documents,
+    )
     from gduns_name_match_spark.plans.pipeline import extract_name_mentions
 
     t = {}
@@ -59,43 +62,30 @@ def run_once(spark) -> dict:
     idf = build_idf(texts.withColumnRenamed("t_norm", "norm_name"), "norm_name")
     mark("build_idf")
 
-    cosine = make_cosine_udf(spark, idf)
-    blocking = candidate_pairs(
-        with_block_keys(texts.withColumnRenamed("t_norm", "m_norm"), "m_norm"),
-        with_block_keys(texts.withColumnRenamed("t_norm", "r_norm"), "r_norm"),
-        probe_id="m_norm",
-        registry_id="r_norm",
-        n_salt=4,
-    )
-    pairs = blocking.pairs.filter(F.col("m_norm") < F.col("r_norm"))
+    blocking = _text_pair_halves(texts)
+    pairs = blocking.pairs
     n_pairs = pairs.count()
     mark("blocking_pairs")
 
-    len_ok = (
-        F.least(F.length("m_norm"), F.length("r_norm"))
-        >= 0.4 * F.greatest(F.length("m_norm"), F.length("r_norm"))
+    # natural block-join order, no probe repartition (round 7)
+    scored = score_pairs(
+        pairs, make_scorer(spark, {"texts": idf}), partition_by_probe=False
     )
-    # round 7: natural block-join order, no probe repartition (see
-    # _accepted_pairs partition_by_probe=False)
-    scored = pairs.filter(len_ok).withColumn(
-        "cos_dist", cosine(F.col("m_norm"), F.col("r_norm"))
+    half = (
+        scored.filter(F.col("cos_dist") <= THRESHOLD)
+        .select("m_norm", "r_norm", "cos_dist")
+        .localCheckpoint()
     )
-    accepted = scored.filter(F.col("cos_dist") <= THRESHOLD).localCheckpoint()
     mark("score+accept")
-    release_blocking_caches(blocking)
+    blocking.release()
 
-    accepted = accepted.unionByName(
-        accepted.select(
+    nonself = half.unionByName(
+        half.select(
             F.col("r_norm").alias("m_norm"), F.col("m_norm").alias("r_norm"),
             "cos_dist",
         )
     )
-    nonself = accepted.filter(F.col("m_norm") != F.col("r_norm")).localCheckpoint()
-    mark("mirror+nonself")
-
-    edges = nonself.filter(F.col("m_norm") < F.col("r_norm")).select(
-        F.col("m_norm").alias("src"), F.col("r_norm").alias("dst")
-    )
+    edges = half.select(F.col("m_norm").alias("src"), F.col("r_norm").alias("dst"))
     comp = connected_components(edges)
     n_comp = comp.count()
     mark("connected_components")
@@ -103,17 +93,10 @@ def run_once(spark) -> dict:
     with_comp = attach_components(
         texts.withColumnRenamed("t_norm", "node"), comp, "node"
     )
-    w = Window.partitionBy("m_norm").orderBy(
-        F.col("cos_dist").asc(), F.col("r_norm").asc()
-    )
-    best = (
-        nonself.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") == 1)
-        .select(
-            F.col("m_norm").alias("node"),
-            F.col("r_norm").alias("best_name"),
-            F.col("cos_dist").alias("best_dist"),
-        )
+    best = best_match_per_probe(nonself, "m_norm").select(
+        F.col("m_norm").alias("node"),
+        F.col("r_norm").alias("best_name"),
+        F.col("cos_dist").alias("best_dist"),
     )
     resolved = with_comp.join(best, "node", "left").select(
         F.col("node").alias("t_norm"), "component", "best_name", "best_dist"

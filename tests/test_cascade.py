@@ -328,7 +328,7 @@ def test_per_registry_idf_reference_parity(spark):
         build_idf_by_tag,
         cosine_dist_local,
         fit_idf_local,
-        make_tagged_cosine_udf,
+        make_scorer,
     )
 
     cu_names = [f"{p}federalcreditunion" for p in (
@@ -359,14 +359,15 @@ def test_per_registry_idf_reference_parity(spark):
     # distributed build == local reference fit, per tag
     for g, w in fit_idf_local(cu_names).items():
         assert abs(idfs["cu"][g] - w) < 1e-12
-    scorer = make_tagged_cosine_udf(spark, idfs)
+    scorer = make_scorer(spark, idfs)
     pairs = spark.createDataFrame(
         [(probe, c, "cu") for c in cu_names]
         + [(probe, cu_names[0], "dnb")],
         "m_norm string, r_norm string, tag string",
     )
     scored = pairs.withColumn(
-        "cos_dist", scorer(F.col("m_norm"), F.col("r_norm"), F.col("tag"))
+        "cos_dist",
+        scorer(F.col("m_norm"), F.col("r_norm"), F.col("tag"))["cos_dist"],
     ).collect()
     best_cu = min(r["cos_dist"] for r in scored if r["tag"] == "cu")
     assert abs(best_cu - d_cu) < 1e-9
@@ -526,7 +527,7 @@ def test_group_refit_city_tiebreak_reference_parity(spark):
         build_idf,
         cosine_dist_local,
         fit_idf_local,
-        make_cosine_udf,
+        make_scorer,
     )
     from gduns_name_match_spark.operators.resolve import resolve_gdun
 
@@ -563,7 +564,7 @@ def test_group_refit_city_tiebreak_reference_parity(spark):
 
     # the registry-wide-IDF ranking demonstrably diverges on this fixture —
     # both cities pass 0.2, the rung falls through, -67000
-    global_udf = make_cosine_udf(spark, build_idf(reg, "norm_city"))
+    global_udf = make_scorer(spark, {"city": build_idf(reg, "norm_city")})
     global_row = resolve_gdun(
         best, reg, city_cosine_udf=global_udf, probe_id="probe_key",
         probe_city="m_city", probe_state="m_state",

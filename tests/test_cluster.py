@@ -243,3 +243,35 @@ def test_cc_byte_gate_falls_back_to_distributed(spark):
     )
     assert got == want
     assert dict(got)["gamma"] == "alpha"
+
+
+def test_cc_byte_gate_counts_bytes_not_chars(spark, monkeypatch):
+    """The byte gate measures UTF-8 bytes: 24 two-byte characters of node ids
+    (48 bytes) must exceed a 40-byte gate and take the distributed star
+    loop, though they are only 24 characters — output unchanged."""
+    from gduns_name_match_spark.operators import cluster
+
+    calls = []
+    real_large_star = cluster._large_star
+
+    def counting_large_star(edges):
+        calls.append(1)
+        return real_large_star(edges)
+
+    edges = [("éééééé", "ëëëëëë"), ("ëëëëëë", "ïïïïïï")]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    monkeypatch.setattr(cluster, "_large_star", counting_large_star)
+    got = sorted(
+        map(tuple, connected_components(df, driver_byte_threshold=40).collect())
+    )
+    assert calls, "a 48-byte edge list passed a 40-byte gate"
+    assert got == [("éééééé", "éééééé"), ("ëëëëëë", "éééééé"), ("ïïïïïï", "éééééé")]
+
+
+@pytest.mark.parametrize("driver_threshold", [500_000, 0])
+def test_cc_rejects_mixed_node_types(spark, driver_threshold):
+    """src/dst of different types fail loudly, identically on the driver
+    fast path and the distributed loop."""
+    df = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst int")
+    with pytest.raises(TypeError, match="one node type"):
+        connected_components(df, driver_threshold=driver_threshold)

@@ -587,18 +587,21 @@ def test_mega_block_salted_complete_and_not_dropped(spark):
     res.release()
 
 
-def test_accepted_pairs_partitioning_invariant(spark):
+def test_score_pairs_partitioning_invariant(spark):
     """partition_by_probe=False (the round-7 block-locality scoring order)
     must accept the IDENTICAL (probe, name, cos_dist) set as the
     probe-partitioned plan — the partitioning choice is an execution detail,
     never a semantic one. Mixed-length corpus so both the short-key and the
     band-key blocking regimes are exercised."""
-    from gduns_name_match_spark.functions.similarity import build_idf
-    from gduns_name_match_spark.operators.blocking import (
-        release_blocking_caches,
+    from pyspark.sql import functions as F
+
+    from gduns_name_match_spark.functions.similarity import (
+        build_idf,
+        make_scorer,
+        score_pairs,
     )
     from gduns_name_match_spark.operators.resolve import THRESHOLD
-    from gduns_name_match_spark.plans.cascade import _accepted_pairs
+    from gduns_name_match_spark.plans.flagship import _text_pair_halves
 
     base = [
         "firstnationalbank", "firstnationalbankna", "wellsfargobank",
@@ -618,15 +621,14 @@ def test_accepted_pairs_partitioning_invariant(spark):
     idf = build_idf(texts.withColumnRenamed("t_norm", "norm_name"), "norm_name")
 
     def run(partitioned: bool):
-        acc, stats = _accepted_pairs(
-            spark,
-            texts.withColumnRenamed("t_norm", "m_norm"),
-            texts.withColumnRenamed("t_norm", "r_norm"),
-            idf, THRESHOLD, "m_norm", "r_norm", symmetric=True,
+        blocking = _text_pair_halves(texts)
+        acc = score_pairs(
+            blocking.pairs,
+            make_scorer(spark, {"texts": idf}),
             partition_by_probe=partitioned,
-        )
+        ).filter(F.col("cos_dist") <= THRESHOLD)
         rows = {(r["m_norm"], r["r_norm"], r["cos_dist"]) for r in acc.collect()}
-        release_blocking_caches(stats)
+        blocking.release()
         return rows
 
     a, b = run(True), run(False)

@@ -14,7 +14,7 @@ from gduns_name_match_spark.functions.similarity import (
     build_idf,
     char_ngrams,
     jaro_winkler,
-    make_pair_scorer,
+    make_scorer,
 )
 
 
@@ -117,7 +117,7 @@ def test_build_idf_matches_manual(spark):
 
 def test_pair_scorer_udf_end_to_end(spark):
     idf = _manual_idf(REGISTRY)
-    scorer = make_pair_scorer(spark, idf)
+    scorer = make_scorer(spark, {"dnb": idf}, compute_jw=True)
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame(
